@@ -27,26 +27,6 @@ from formula1_etl_analytics_project_spark.session import get_spark
 from formula1_etl_analytics_project_spark.sources.readers import read_wide_csv
 from formula1_etl_analytics_project_spark.sources.sinks import write_parquet
 
-# Reference load order (FK-safe: dims -> hub -> facts), CompleteETL.py:1034-1042.
-LOAD_ORDER = [
-    "date_dim",
-    "location_dim",
-    "status_dim",
-    "driver",
-    "team",
-    "race",
-    "time_dim",
-    "sprint",
-    "free_practice",
-    "qualification",
-    "laps",
-    "pit_stop",
-    "results",
-    "driver_standings",
-    "team_standings",
-]
-
-
 def run_etl(
     spark: SparkSession,
     input_csv: str,
@@ -56,10 +36,12 @@ def run_etl(
     """Wide CSV -> 15 star-schema parquet tables. Returns row counts
     per table (the write is the only action per table). With
     ``register`` the written tables are exposed as temp views so
-    ``spark.sql`` works immediately (EP3 surface)."""
+    ``spark.sql`` works immediately (EP3 surface). Tables load in
+    ``BUILDERS`` order, the reference's FK-safe load order (dims -> hub
+    -> facts, CompleteETL.py:1034-1042)."""
     wide = read_wide_csv(spark, input_csv).cache()
     counts: dict[str, int] = {}
-    for name in LOAD_ORDER:
+    for name in BUILDERS:
         df = BUILDERS[name](wide)
         path = f"{out_dir}/{name}"
         write_parquet(df, path, mode="overwrite")
@@ -83,7 +65,7 @@ def main(argv: list[str] | None = None) -> int:
     args = p.parse_args(argv)
     spark = get_spark(app_name="formula1-etl")
     counts = run_etl(spark, args.input, args.out)
-    for name in LOAD_ORDER:
+    for name in BUILDERS:
         print(f"{name}: {counts[name]} rows")
     if args.sql:
         spark.sql(args.sql).show(50, truncate=False)

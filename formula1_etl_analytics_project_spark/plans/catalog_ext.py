@@ -2711,15 +2711,17 @@ GROUP BY o_orderstatus
     gate_priority=True,
 )
 def q_upsert_versioned_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The crash-safe versioned snapshot store through a real two-batch
-    round-trip: base orders seed version 1, a batch bumping every 300th
-    order's price merges into version 2 (write-new-then-repoint - no
-    delete-before-write window, see sources.sinks.upsert_parquet_
-    versioned), and the final per-status totals read via read_snapshot
-    must equal the oracle's base-plus-updates restatement."""
+    """The crash-safe snapshot store through a real two-batch
+    round-trip: base orders seed commit 1, a batch bumping every 300th
+    order's price merges into commit 2 (new snapshot dir published by
+    an atomic commit-file claim - no delete-before-write window, see
+    sources.sinks.upsert_parquet_versioned), and the final per-status
+    totals read via read_snapshot must equal the oracle's
+    base-plus-updates restatement."""
     import shutil as _shutil
 
     from formula1_etl_analytics_project_spark.sources.sinks import (
+        read_snapshot,
         upsert_parquet_versioned,
     )
 
@@ -2734,8 +2736,8 @@ def q_upsert_versioned_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     incoming = orders.filter(F.col("o_orderkey") % 300 == 0).withColumn(
         "o_totalprice", F.col("o_totalprice") + 5000
     )
-    snap = upsert_parquet_versioned(spark, incoming, store, keys=["o_orderkey"])
-    return snap.groupBy("o_orderstatus").agg(
+    upsert_parquet_versioned(spark, incoming, store, keys=["o_orderkey"])
+    return read_snapshot(spark, store).groupBy("o_orderstatus").agg(
         F.count("*").alias("n_orders"),
         _dsum(F.col("o_totalprice"), "total_price"),
     )
@@ -3181,8 +3183,8 @@ def q_stream_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctness gate: a base snapshot of every event arrives in early
     micro-batches, then an update wave (every 7th event with a doubled
     value) arrives in later ones; ``incremental_upsert_stream`` merges
-    each micro-batch into the crash-safe versioned snapshot store
-    (write-new-then-repoint, streaming/pipeline.py), and the final
+    each micro-batch into the crash-safe commit-log snapshot store
+    (streaming/pipeline.py), and the final
     snapshot read through ``read_snapshot`` must equal base-with-
     updates-applied. File mtimes are pinned so the file source's
     (modTime, path) ordering replays base strictly before updates -

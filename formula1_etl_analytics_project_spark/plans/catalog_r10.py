@@ -931,11 +931,11 @@ def q_upsert_commitlog_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The optimistic-concurrency commit-log store through a real
     three-commit round-trip: base orders claim commit 1, then two
     UPDATE batches (every 400th key +9000; every 400k+7th key -1000)
-    merge as commits 2 and 3 - each claimed by an atomic O_EXCL
-    commit-file create, the mechanism that makes concurrent writers
-    lost-update-free (see sources/sinks.py commit_log_upsert and the
-    two-writer race test in tests/test_commit_log.py). The final
-    per-status totals read through read_committed_snapshot must equal
+    merge as commits 2 and 3 - each claimed by an atomic link of the
+    full commit file, the mechanism that makes concurrent writers
+    lost-update-free (see sources/sinks.py upsert_parquet_versioned and
+    the writer race tests in tests/test_commit_log.py). The final
+    per-status totals read through read_snapshot must equal
     the oracle's base-plus-both-updates restatement - proving the log
     resolution, snapshot isolation, and merge semantics end-to-end
     on plain parquet, the container's stand-in for a Delta/Iceberg
@@ -947,8 +947,8 @@ def q_upsert_commitlog_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         _stage_dir,
     )
     from formula1_etl_analytics_project_spark.sources.sinks import (
-        commit_log_upsert,
-        read_committed_snapshot,
+        read_snapshot,
+        upsert_parquet_versioned,
     )
 
     orders = read_table(spark, sf_dir, "orders").select(
@@ -956,16 +956,16 @@ def q_upsert_commitlog_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     store = os.path.join(_stage_dir(sf_dir, "commitlog", "orders"), "store")
     _shutil.rmtree(store, ignore_errors=True)
-    commit_log_upsert(spark, orders, store, keys=["o_orderkey"])
+    upsert_parquet_versioned(spark, orders, store, keys=["o_orderkey"])
     up1 = orders.filter(F.col("o_orderkey") % 400 == 0).withColumn(
         "o_totalprice", F.col("o_totalprice") + 9000
     )
-    commit_log_upsert(spark, up1, store, keys=["o_orderkey"])
+    upsert_parquet_versioned(spark, up1, store, keys=["o_orderkey"])
     up2 = orders.filter(F.col("o_orderkey") % 400 == 7).withColumn(
         "o_totalprice", F.col("o_totalprice") - 1000
     )
-    commit_log_upsert(spark, up2, store, keys=["o_orderkey"])
-    snap = read_committed_snapshot(spark, store)
+    upsert_parquet_versioned(spark, up2, store, keys=["o_orderkey"])
+    snap = read_snapshot(spark, store)
     return snap.groupBy("o_orderstatus").agg(
         F.count("*").alias("n_orders"),
         F.sum(F.col("o_totalprice").cast("decimal(30,4)"))
@@ -1003,7 +1003,7 @@ FROM v2
 def q_time_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Version-over-version audit via TIME TRAVEL: commit base orders,
     commit an update batch (+7000 on every 250th key), then read BOTH
-    versions back by commit number (read_committed_snapshot(version=))
+    versions back by commit number (read_snapshot(version=))
     and diff them key-by-key - row count, changed-row count, and the
     exact total price delta. This is the backfill-audit question
     ("what did yesterday's load change?") answered from the store's
@@ -1021,8 +1021,8 @@ def q_time_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         _stage_dir,
     )
     from formula1_etl_analytics_project_spark.sources.sinks import (
-        commit_log_upsert,
-        read_committed_snapshot,
+        read_snapshot,
+        upsert_parquet_versioned,
     )
 
     orders = read_table(spark, sf_dir, "orders").select(
@@ -1030,16 +1030,16 @@ def q_time_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     store = os.path.join(_stage_dir(sf_dir, "ttdiff", "orders"), "store")
     _shutil.rmtree(store, ignore_errors=True)
-    commit_log_upsert(spark, orders, store, keys=["o_orderkey"])
+    upsert_parquet_versioned(spark, orders, store, keys=["o_orderkey"])
     upd = orders.filter(F.col("o_orderkey") % 250 == 0).withColumn(
         "o_totalprice", F.col("o_totalprice") + 7000
     )
-    commit_log_upsert(spark, upd, store, keys=["o_orderkey"])
+    upsert_parquet_versioned(spark, upd, store, keys=["o_orderkey"])
 
-    v1 = read_committed_snapshot(spark, store, version=1).select(
+    v1 = read_snapshot(spark, store, version=1).select(
         "o_orderkey", F.col("o_totalprice").alias("p1")
     )
-    v2 = read_committed_snapshot(spark, store, version=2).select(
+    v2 = read_snapshot(spark, store, version=2).select(
         "o_orderkey", F.col("o_totalprice").alias("p2")
     )
     diff = v1.join(v2, "o_orderkey")
@@ -1088,7 +1088,7 @@ def q_stream_exactly_once_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (every price zeroed) - the crash-recovery scenario where the
     foreachBatch checkpoint lags the sink commit. merge_epoch_batch
     must skip the replay (epoch already committed atomically with the
-    snapshot pointer), so the final totals equal base-plus-one-update
+    snapshot, in the same commit file), so the final totals equal base-plus-one-update
     and the corrupted replay leaves NO trace. The oracle restates the
     expected final state plus the applied/skipped ledger; any
     double-apply or corruption flips the value hash.

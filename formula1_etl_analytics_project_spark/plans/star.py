@@ -302,6 +302,8 @@ def build_team_standings(wide: DataFrame) -> DataFrame:
     )
 
 
+# Key order is the reference's FK-safe load order (dims -> hub -> facts,
+# CompleteETL.py:1034-1042); etl.run_etl loads in this order.
 BUILDERS = {
     "date_dim": build_date_dim,
     "location_dim": build_location_dim,

@@ -27,51 +27,6 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-def cluster_conf(
-    executors: int = 1000,
-    cores_per_executor: int = 4,
-    executor_mem_gb: int = 16,
-) -> dict[str, str]:
-    """The conf this engine would ship to a real 100 TB cluster - the
-    delta from ``get_spark``'s local profile. Returned as a dict so a
-    deployment wraps it into spark-submit/defaults; every value is
-    justified here rather than cargo-culted.
-
-    * shuffle partitions ~ 2x total cores: enough tasks to keep every
-      core busy through stragglers; AQE coalesces small ones back
-      together, so over-provisioning costs little.
-    * 128 MiB scan splits (default kept): 100 TB -> ~800k tasks, fine
-      for a driver with the memory below; smaller splits would explode
-      scheduler pressure.
-    * advisory partition size 128 MiB: AQE's target when coalescing
-      and when splitting skewed joins.
-    * executor memory overhead 25%: Arrow/pandas UDF workers live
-      OUTSIDE the JVM heap; the multimodal/grouped operators need the
-      headroom or YARN/K8s kills the container.
-    * shuffle compression + zstd: shuffle volume dominates network at
-      this scale; zstd trades a little CPU for ~30% smaller shuffles.
-    * broadcast threshold stays default (10 MB): dims in this schema
-      fit; raising it risks driver OOM on the 10-way star join.
-    """
-    total_cores = executors * cores_per_executor
-    return {
-        "spark.executor.instances": str(executors),
-        "spark.executor.cores": str(cores_per_executor),
-        "spark.executor.memory": f"{executor_mem_gb}g",
-        "spark.executor.memoryOverheadFactor": "0.25",
-        "spark.driver.memory": "32g",
-        "spark.sql.shuffle.partitions": str(2 * total_cores),
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "128m",
-        "spark.sql.files.maxPartitionBytes": "134217728",
-        "spark.shuffle.compress": "true",
-        "spark.io.compression.codec": "zstd",
-        "spark.sql.session.timeZone": "UTC",
-    }
-
-
 def get_spark(
     app_name: str = "formula1-etl-analytics-spark",
     cpus: int | None = None,

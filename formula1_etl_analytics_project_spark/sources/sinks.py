@@ -10,7 +10,11 @@ Reference behavior being replaced (SURVEY.md section 2.1/2.4):
     (``__pycache__/resultssss.cpython-38.pyc``) -> left-anti join of
     existing rows against incoming keys, then union-append. With plain
     parquet (no Delta in this image) the merge materializes a new
-    snapshot; on Delta/Iceberg the same logical plan becomes MERGE.
+    snapshot, published through ONE snapshot store: a commit log of
+    atomically claimed commit files over immutable snapshot dirs
+    (``upsert_parquet_versioned`` / ``read_snapshot`` - multi-writer,
+    time travel, streaming epochs). On Delta/Iceberg the same logical
+    plan becomes MERGE.
 
 Scale notes: ``partition_by`` should be a low-cardinality natural key
 (e.g. year) so 100 TB writes produce prunable directories; the upsert
@@ -19,6 +23,11 @@ the merge key turns that into a shuffle-free join.
 """
 
 from __future__ import annotations
+
+import os
+import posixpath
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -286,212 +295,6 @@ def prepare_jdbc_write(
     return writer_df, props
 
 
-def upsert_parquet(
-    spark,
-    incoming: DataFrame,
-    path: str,
-    keys: list[str],
-    order_col: str | None = None,
-) -> DataFrame:
-    """foreachBatch-compatible incremental load onto a parquet snapshot.
-
-    Durability: the merged snapshot is written to a STAGING directory
-    first, then swapped into place (delete old + rename staging) - a
-    crash mid-write leaves the previous snapshot intact; only the
-    narrow delete/rename window is exposed. Plain parquet has no
-    atomic commit, so this is at-least-once, not exactly-once; a table
-    format with a transactional MERGE (Delta/Iceberg) is the scale
-    answer, and this function is its drop-in logical twin.
-    """
-    import uuid as _uuid
-
-    try:
-        existing = spark.read.parquet(path)
-    except Exception:
-        existing = None
-    merged = (
-        incoming
-        if existing is None
-        else upsert(existing, incoming, keys, order_col=order_col)
-    )
-    staging = f"{path}__staging_{_uuid.uuid4().hex[:12]}"
-    write_parquet(merged, staging, mode="overwrite")
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs = Path(path).getFileSystem(hconf)
-    fs.delete(Path(path), True)
-    fs.rename(Path(staging), Path(path))
-    return spark.read.parquet(path)
-
-
-# ---------------------------------------------------------------------------
-# Versioned snapshot store: write-new-then-repoint, never delete-before-write
-# ---------------------------------------------------------------------------
-
-_CURRENT = "_current"
-_VERSION_PREFIX = "_v"
-
-
-def _pointer_path(path: str) -> str:
-    import posixpath as _pp
-
-    return _pp.join(path, _CURRENT)
-
-
-def read_current_version(path: str) -> str | None:
-    """Name of the live snapshot version (e.g. ``_v00000003``), or None
-    for an empty store. The pointer line may carry an ``epoch=N``
-    suffix (see :func:`read_current_epoch`); only the first token is
-    the version."""
-    try:
-        with open(_pointer_path(path)) as f:
-            line = f.read().strip()
-            return line.split()[0] if line else None
-    except (FileNotFoundError, NotADirectoryError):
-        return None
-
-
-def read_current_epoch(path: str) -> int | None:
-    """Streaming epoch committed WITH the live snapshot (the
-    ``epoch=N`` token of the pointer line), or None if the store is
-    empty / was never written by an epoch-tagged merge. Because the
-    pointer is replaced atomically, the epoch and the snapshot it
-    describes can never be observed out of sync - this is what makes
-    foreachBatch replay EXACTLY-once (see incremental_upsert_stream).
-    """
-    try:
-        with open(_pointer_path(path)) as f:
-            for tok in f.read().strip().split():
-                if tok.startswith("epoch="):
-                    return int(tok[len("epoch="):])
-    except (FileNotFoundError, NotADirectoryError, ValueError):
-        return None
-    return None
-
-
-def read_snapshot(spark, path: str) -> DataFrame:
-    """Read the live snapshot of a versioned store (see
-    :func:`upsert_parquet_versioned`). Raises ``FileNotFoundError`` on
-    an empty store."""
-    import posixpath as _pp
-
-    version = read_current_version(path)
-    if version is None:
-        raise FileNotFoundError(f"no current snapshot under {path}")
-    return spark.read.parquet(_pp.join(path, version))
-
-
-def _write_new_version(
-    spark, merged: DataFrame, path: str, current: str | None
-) -> str:
-    """Step 1 of the swap: materialize the merged snapshot under the
-    NEXT version directory. Crash-safe by construction - nothing
-    existing is touched; a crash here strands an underscore-prefixed
-    orphan dir that readers skip and the next upsert prunes."""
-    import posixpath as _pp
-
-    n = int(current[len(_VERSION_PREFIX):]) if current else 0
-    version = f"{_VERSION_PREFIX}{n + 1:08d}"
-    write_parquet(merged, _pp.join(path, version), mode="overwrite")
-    return version
-
-
-def _repoint(path: str, version: str, epoch_id: int | None = None) -> None:
-    """Step 2 of the swap: atomically flip the ``_current`` pointer.
-
-    Local/POSIX ``os.replace`` is an atomic overwrite, so a reader sees
-    either the old pointer or the new one, never a missing/partial
-    file. (HDFS equivalent: FileContext.rename(..., Options.Rename.
-    OVERWRITE); S3 has no atomic rename - there a table format's commit
-    log (Delta/Iceberg) is the real answer, and this store is its
-    plain-parquet logical twin.)"""
-    import os as _os
-    import uuid as _uuid
-
-    tmp = _pp_join_safe(path, f"._current_tmp_{_uuid.uuid4().hex[:12]}")
-    with open(tmp, "w") as f:
-        f.write(version + (f" epoch={epoch_id}" if epoch_id is not None else "") + "\n")
-        f.flush()
-        _os.fsync(f.fileno())
-    _os.replace(tmp, _pointer_path(path))
-
-
-def _pp_join_safe(*parts: str) -> str:
-    import posixpath as _pp
-
-    return _pp.join(*parts)
-
-
-def _prune_versions(path: str, keep: tuple[str, ...]) -> None:
-    """Drop version dirs other than ``keep`` (current + previous stay
-    so in-flight readers holding the old pointer can finish their
-    scan). Also removes orphans from crashed step-1 writes."""
-    import os as _os
-    import shutil as _shutil
-
-    try:
-        names = _os.listdir(path)
-    except FileNotFoundError:
-        return
-    for name in names:
-        if name.startswith(_VERSION_PREFIX) and name not in keep:
-            _shutil.rmtree(_pp_join_safe(path, name), ignore_errors=True)
-
-
-def upsert_parquet_versioned(
-    spark,
-    incoming: DataFrame,
-    path: str,
-    keys: list[str],
-    order_col: str | None = None,
-    epoch_id: int | None = None,
-) -> DataFrame:
-    """Crash-safe merge-on-key onto a versioned parquet snapshot store.
-
-    Layout::
-
-        path/_current        <- tiny pointer file, atomically replaced
-        path/_v00000001/     <- immutable plain-parquet snapshots
-        path/_v00000002/
-
-    The swap is write-new-then-repoint: the merged snapshot is fully
-    written under the next ``_v...`` dir (step 1), THEN the pointer is
-    atomically flipped (step 2). There is no delete-before-write
-    anywhere, so a reader through :func:`read_snapshot` observes either
-    the previous complete snapshot or the new complete snapshot at
-    every instant - the delete/rename data-loss window of the in-place
-    :func:`upsert_parquet` does not exist. A crash in step 1 strands an
-    orphan version dir (underscore-prefixed - invisible to readers,
-    pruned by the next successful upsert); a crash before step 2 leaves
-    the old pointer live. The previous version is retained after the
-    flip so in-flight readers finish; older versions are pruned.
-
-    Each snapshot stays plain parquet - any engine can read
-    ``path/<version>`` directly after resolving the one-line pointer.
-
-    ``epoch_id`` (streaming callers) rides in the pointer line and
-    commits atomically with the flip; replayed micro-batches are then
-    detectable via :func:`read_current_epoch` BEFORE re-merging -
-    exactly-once for the single-writer streaming upsert even when the
-    merge itself is not idempotent.
-    """
-    current = read_current_version(path)
-    if current is None:
-        import os as _os
-
-        _os.makedirs(path, exist_ok=True)
-        merged = incoming
-    else:
-        existing = read_snapshot(spark, path)
-        merged = upsert(existing, incoming, keys, order_col=order_col)
-    version = _write_new_version(spark, merged, path, current)
-    _repoint(path, version, epoch_id)
-    keep = (version, current) if current else (version,)
-    _prune_versions(path, keep)
-    return read_snapshot(spark, path)
-
-
 def upsert_parquet_partitioned(
     spark,
     incoming: DataFrame,
@@ -548,8 +351,10 @@ def upsert_parquet_partitioned(
     directories); the merge result is localCheckpoint-materialized,
     then written with dynamic partition overwrite, which replaces
     exactly the partitions present in the result. Commit is per
-    partition directory, so the non-atomicity window of
-    ``upsert_parquet`` shrinks to the touched partitions.
+    partition directory, so the window in which a partition is
+    replaced non-atomically shrinks to the touched partitions (the
+    whole-table store with an atomic commit is
+    :func:`upsert_parquet_versioned`).
 
     ``evolve_schema`` (Delta ``mergeSchema``-on-MERGE twin): the
     incoming batch may carry columns the snapshot lacks (and vice
@@ -673,8 +478,8 @@ def compact_parquet(
     compaction restores ~``target_file_bytes`` files (128 MB default,
     the usual HDFS/S3 sweet spot).
 
-    Uses the staging + swap pattern of :func:`upsert_parquet` so a
-    crash keeps the original directory. Returns the output file count.
+    Writes a staging dir first, then swaps it in (delete + rename), so
+    a crash during the write keeps the original directory. Returns the output file count.
     ``coalesce`` (not ``repartition``) avoids a shuffle - compaction is
     pure IO. Partitioned layouts should compact per partition directory
     (call this per partition path) so untouched partitions stay put.
@@ -721,60 +526,77 @@ def compact_parquet(
 
 
 # ---------------------------------------------------------------------------
-# Commit-log snapshot store: optimistic concurrency on plain parquet
+# Snapshot store: a commit log over immutable parquet snapshots
 # ---------------------------------------------------------------------------
 
 _LOG_DIR = "_log"
 
 
 def _log_path(path: str) -> str:
-    return _pp_join_safe(path, _LOG_DIR)
+    return posixpath.join(path, _LOG_DIR)
 
 
-def read_committed(path: str) -> tuple[int, str] | None:
-    """Latest committed (commit number, snapshot dir name) from the
-    commit log, or None for an empty store. The log is the source of
-    truth: a data dir without a commit file does not exist."""
-    import os as _os
-
+def _head(path: str) -> int | None:
+    """Latest commit number in ``path/_log/``, or None for an empty
+    store. The log is the source of truth: a snapshot dir without a
+    commit file does not exist."""
     try:
-        names = _os.listdir(_log_path(path))
+        names = os.listdir(_log_path(path))
     except FileNotFoundError:
         return None
-    commits = sorted(n for n in names if n.endswith(".commit"))
-    if not commits:
-        return None
-    latest = commits[-1]
-    with open(_pp_join_safe(_log_path(path), latest)) as f:
-        return int(latest.split(".")[0]), f.read().strip()
+    commits = [n for n in names if n.endswith(".commit")]
+    return int(max(commits).split(".")[0]) if commits else None
 
 
-def read_committed_snapshot(
-    spark, path: str, version: int | None = None
-) -> DataFrame:
-    """Read the latest committed snapshot, or - time travel - the
-    snapshot as of commit ``version``. Every commit file names its
-    immutable snapshot dir, so any still-retained version is readable
-    by number (Delta's ``VERSION AS OF`` twin; retention is bounded by
-    the prune policy: current + previous are always kept, older
-    versions only until the next successful commit)."""
-    import os as _os
+def _read_commit(path: str, n: int) -> tuple[str, int | None]:
+    """(snapshot dir, streaming epoch or None) named by commit ``n``.
+    A commit file is one line: ``<snap_dir>`` or ``<snap_dir> epoch=N``."""
+    with open(posixpath.join(_log_path(path), f"{n:08d}.commit")) as f:
+        snap_dir, *tags = f.read().split()
+    epochs = [int(t[len("epoch="):]) for t in tags if t.startswith("epoch=")]
+    return snap_dir, (epochs[0] if epochs else None)
 
+
+def read_current_version(path: str) -> str | None:
+    """Directory name, relative to ``path``, of the head commit's
+    snapshot (e.g. ``_snap_00000003_1a2b3c4d``), or None for an empty
+    store."""
+    head = _head(path)
+    return None if head is None else _read_commit(path, head)[0]
+
+
+def read_current_epoch(path: str) -> int | None:
+    """Streaming epoch recorded in the head commit, or None if the
+    store is empty or its head was not written by an epoch-tagged
+    merge. The epoch is part of the commit file, so it is published
+    atomically with the snapshot it describes and the two can never be
+    observed out of sync - this is what makes foreachBatch replay
+    exactly-once (see streaming.pipeline.merge_epoch_batch)."""
+    head = _head(path)
+    return None if head is None else _read_commit(path, head)[1]
+
+
+def read_snapshot(spark, path: str, version: int | None = None) -> DataFrame:
+    """Read the head snapshot, or - time travel - the snapshot as of
+    commit ``version`` (Delta's ``VERSION AS OF`` twin). Every commit
+    names its immutable snapshot dir, so any retained version is
+    readable by number; each upsert keeps the last two commits'
+    snapshots (see :func:`vacuum_commit_log`). Raises
+    ``FileNotFoundError`` for an empty store, a commit that does not
+    exist, or one whose snapshot was vacuumed - never silently wrong
+    data."""
     if version is None:
-        committed = read_committed(path)
-        if committed is None:
+        version = _head(path)
+        if version is None:
             raise FileNotFoundError(f"no committed snapshot under {path}")
-        return spark.read.parquet(_pp_join_safe(path, committed[1]))
-    claim = _pp_join_safe(_log_path(path), f"{version:08d}.commit")
     try:
-        with open(claim) as f:
-            snap_dir = f.read().strip()
+        snap_dir = _read_commit(path, version)[0]
     except FileNotFoundError:
         raise FileNotFoundError(
             f"commit {version} does not exist under {path}"
         ) from None
-    full = _pp_join_safe(path, snap_dir)
-    if not _os.path.isdir(full):
+    full = posixpath.join(path, snap_dir)
+    if not os.path.isdir(full):
         raise FileNotFoundError(
             f"commit {version} exists but its snapshot {snap_dir} was "
             f"pruned by the retention policy"
@@ -782,178 +604,176 @@ def read_committed_snapshot(
     return spark.read.parquet(full)
 
 
-def commit_log_upsert(
+def _claim(path: str, n: int, snap_dir: str, epoch_id: int | None = None) -> bool:
+    """Publish commit ``n`` naming ``snap_dir`` (and ``epoch_id``)
+    ATOMICALLY WITH ITS CONTENT. The line is written and fsynced to a
+    writer-private temp file first, then ``os.link`` publishes it under
+    the claim name: one atomic directory operation that fails with
+    ``FileExistsError`` if another writer claimed ``n`` first. There is
+    no window where the claim exists empty (an O_EXCL create-then-write
+    would expose exactly that window to readers and to crashes).
+    Returns False on a lost race.
+
+    Stale ``.claim_tmp_`` files from crashed writers are left in place
+    deliberately - unlinking them would race an in-flight writer
+    between its temp write and its link. They are dot-prefixed
+    (invisible to readers) and tiny."""
+    log = _log_path(path)
+    tmp = posixpath.join(log, f".claim_tmp_{uuid.uuid4().hex[:12]}")
+    with open(tmp, "w") as f:
+        f.write(snap_dir + ("" if epoch_id is None else f" epoch={epoch_id}") + "\n")
+        f.flush()
+        os.fsync(f.fileno())
+    try:
+        os.link(tmp, posixpath.join(log, f"{n:08d}.commit"))
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+
+
+def upsert_parquet_versioned(
     spark,
     incoming: DataFrame,
     path: str,
     keys: list[str],
     order_col: str | None = None,
+    epoch_id: int | None = None,
     max_retries: int = 8,
-) -> int:
-    """Merge-on-key with OPTIMISTIC CONCURRENCY - the multi-writer
-    upsert the pointer store (:func:`upsert_parquet_versioned`,
-    single-writer by contract) cannot provide, and the plain-parquet
-    logical twin of a Delta/Iceberg transactional MERGE:
+) -> int | None:
+    """Merge-on-key onto the snapshot store with OPTIMISTIC CONCURRENCY
+    - the plain-parquet logical twin of a Delta/Iceberg transactional
+    MERGE, and the store's only write path. Layout::
 
-      1. read the latest commit N from ``path/_log/`` and merge
-         against its snapshot;
+        path/_log/00000001.commit   <- "<snap_dir>[ epoch=N]", never deleted
+        path/_log/00000002.commit
+        path/_snap_00000001_<hex>/  <- immutable plain-parquet snapshots
+        path/_snap_00000002_<hex>/
+
+    Each attempt:
+
+      1. read the head commit N and merge ``incoming`` against its
+         snapshot;
       2. write the merged snapshot under a WRITER-UNIQUE dir (uuid
-         suffix - two racing writers never collide on data files);
-      3. try to claim commit N+1 by hard-LINKING a fully-written
-         temp file to ``_log/<N+1>.commit`` - one atomic directory
-         operation that publishes the claim WITH its content (no
-         empty-claim window). Exactly one racer wins; the loser
-         deletes its orphan snapshot, re-reads, RE-MERGES against the
-         winner's result, and retries. A snapshot-write failure is
-         also treated as a lost race (the winner's retention pruning
-         may remove a lagging writer's base mid-scan) and retries.
+         suffix - racing writers never collide on data files);
+      3. claim commit N+1 (:func:`_claim`). Exactly one racer wins; a
+         loser deletes its orphan snapshot and retries from step 1,
+         re-merging against the winner's result. A snapshot-write
+         failure is also treated as a lost race (a faster writer's
+         retention may remove a lagging writer's base mid-scan).
 
     Lost updates are impossible: a commit is only ever created against
-    the snapshot it merged (the exclusive create fails if anyone
-    committed in between) - proven by the genuinely-concurrent
-    two-writer test (tests/test_commit_log.py), which the pointer
-    store fails by design. Returns the commit number claimed.
+    the snapshot it merged - proven by the genuinely concurrent writer
+    tests in tests/test_commit_log.py. A reader through
+    :func:`read_snapshot` sees the previous or the new complete
+    snapshot at every instant; nothing is deleted before the new
+    snapshot is committed. Crash windows: before the claim -> an orphan
+    underscore-prefixed snapshot dir, invisible to readers and
+    reclaimed by a later vacuum; after the claim -> the commit is
+    complete. The winner then runs :func:`vacuum_commit_log` with
+    ``keep_last=2``: the current and previous snapshots stay for
+    in-flight readers, in-flight writers' dirs are spared.
+
+    ``epoch_id`` (streaming callers, see
+    streaming.pipeline.merge_epoch_batch) is written into the commit
+    file, so it commits atomically with the snapshot. It is checked in
+    step 1 against the head the claim is made on, so a lost race
+    re-checks it against the winner: the head's own epoch means the
+    batch is already applied (return None, nothing written); a lower
+    epoch raises ``ValueError`` - a restarted query with a reset
+    checkpoint would otherwise have its batches silently dropped.
 
     Durability/portability: link-into-place is atomic on POSIX; the
     HDFS equivalent is rename-without-overwrite, and on S3 it maps to
     conditional PUT (If-None-Match) of the full payload - the same
-    primitive Delta's commit protocol uses there. Crash windows:
-    before the claim -> an orphan underscore-prefixed data dir (and
-    possibly a dot-prefixed temp claim) invisible to readers, pruned
-    by later winners; after the claim -> the commit is complete;
-    there is no in-between because the claim publishes atomically
-    with its content.
+    primitive Delta's commit protocol uses there. Returns the commit
+    number claimed, or None for an already-applied epoch.
     """
-    import os as _os
-    import shutil as _shutil
-    import uuid as _uuid
-
     last_err: Exception | None = None
     for _ in range(max_retries):
-        committed = read_committed(path)
-        if committed is None:
-            _os.makedirs(_log_path(path), exist_ok=True)
+        base_n = _head(path)
+        if base_n is None:
+            os.makedirs(_log_path(path), exist_ok=True)
             base_n, merged = 0, incoming
         else:
-            base_n = committed[0]
-            existing = spark.read.parquet(
-                _pp_join_safe(path, committed[1])
-            )
+            base_dir, base_epoch = _read_commit(path, base_n)
+            if (
+                epoch_id is not None
+                and base_epoch is not None
+                and epoch_id <= base_epoch
+            ):
+                if epoch_id == base_epoch:
+                    return None
+                raise ValueError(
+                    f"epoch regression: store {path} committed epoch "
+                    f"{base_epoch} but received epoch {epoch_id}; the "
+                    "stream's checkpoint was reset or a different query is "
+                    "writing - refusing to silently drop batches. Use a "
+                    "fresh snapshot store for a fresh checkpoint."
+                )
+            existing = spark.read.parquet(posixpath.join(path, base_dir))
             merged = upsert(existing, incoming, keys, order_col=order_col)
         next_n = base_n + 1
-        snap_dir = f"_snap_{next_n:08d}_{_uuid.uuid4().hex[:8]}"
+        snap_dir = f"_snap_{next_n:08d}_{uuid.uuid4().hex[:8]}"
         try:
-            write_parquet(
-                merged, _pp_join_safe(path, snap_dir), mode="overwrite"
-            )
+            write_parquet(merged, posixpath.join(path, snap_dir), mode="overwrite")
         except Exception as exc:
-            # A lagging writer can lose its base snapshot mid-scan when
-            # a faster writer commits twice and prunes (retention keeps
-            # current + previous only). Treat ANY write failure as a
-            # lost race: clean up and re-merge against the new head.
             last_err = exc
-            _shutil.rmtree(_pp_join_safe(path, snap_dir), ignore_errors=True)
-            continue
-        # Claim commit next_n ATOMICALLY WITH ITS CONTENT: the payload
-        # is written to a writer-private temp file first, then
-        # os.link() publishes it under the claim name - link fails
-        # with FileExistsError if anyone else claimed, and succeeds
-        # as one atomic directory operation otherwise. There is no
-        # window where the claim exists empty (an O_EXCL-create-then-
-        # write sequence would expose exactly that window to readers
-        # and to crashes).
-        claim = _pp_join_safe(_log_path(path), f"{next_n:08d}.commit")
-        tmp_claim = _pp_join_safe(
-            _log_path(path), f".claim_tmp_{_uuid.uuid4().hex[:12]}"
-        )
-        with open(tmp_claim, "w") as f:
-            f.write(snap_dir + "\n")
-            f.flush()
-            _os.fsync(f.fileno())
-        try:
-            _os.link(tmp_claim, claim)
-        except FileExistsError:
-            # lost the race: drop our snapshot, re-merge against winner
-            _os.unlink(tmp_claim)
-            _shutil.rmtree(
-                _pp_join_safe(path, snap_dir), ignore_errors=True
-            )
-            continue
-        _os.unlink(tmp_claim)
-        # prune snapshots older than previous (keep winner + previous
-        # for in-flight readers), plus orphans from crashed losers
-        keep_dirs = {snap_dir}
-        if committed is not None:
-            keep_dirs.add(committed[1])
-        # NB: stale ".claim_tmp_" files from crashed writers are left
-        # in place deliberately - unlinking them here would race an
-        # in-flight writer between its temp write and its link().
-        # They are dot-prefixed (invisible to readers) and tiny.
-        for name in _os.listdir(path):
-            if name.startswith("_snap_") and name not in keep_dirs:
-                n_part = name.split("_")[2]
-                if n_part.isdigit() and int(n_part) < base_n:
-                    _shutil.rmtree(
-                        _pp_join_safe(path, name), ignore_errors=True
-                    )
-        return next_n
+        else:
+            if _claim(path, next_n, snap_dir, epoch_id):
+                vacuum_commit_log(path, keep_last=2)
+                return next_n
+        # lost the race: drop our snapshot, re-merge against the winner
+        shutil.rmtree(posixpath.join(path, snap_dir), ignore_errors=True)
     raise RuntimeError(
-        f"commit_log_upsert lost the commit race {max_retries} times "
-        f"under {path}; raise max_retries or reduce writer contention"
+        f"upsert_parquet_versioned lost the commit race {max_retries} "
+        f"times under {path}; raise max_retries or reduce writer contention"
     ) from last_err
 
 
 def vacuum_commit_log(path: str, keep_last: int = 2) -> int:
-    """Retention management for the commit-log store: keep the
-    snapshots of the last ``keep_last`` commits (the current one is
-    always kept), delete older snapshot dirs AND loser/crash orphans.
-    Commit FILES are never deleted - the log stays a complete history
-    (they are bytes-sized); time travel to a vacuumed version fails
-    loudly via read_committed_snapshot's pruned-snapshot error rather
-    than silently reading nothing. Returns the number of snapshot
-    dirs removed.
+    """Retention management for the snapshot store: keep the snapshots
+    of the last ``keep_last`` commits (the current one is always kept),
+    delete older snapshot dirs AND loser/crash orphans. Commit FILES are
+    never deleted - the log stays a complete history (they are
+    bytes-sized); time travel to a vacuumed version fails loudly via
+    read_snapshot's pruned-snapshot error rather than silently reading
+    nothing. Returns the number of snapshot dirs removed.
 
-    The Delta VACUUM analogue, minus retention-by-timestamp: callers
-    decide cadence; in-flight readers of a just-vacuumed version are
-    protected the same way as the upsert prune (keep_last >= 2 keeps
-    current + previous).
+    The Delta VACUUM analogue, minus retention-by-timestamp. Every
+    successful upsert runs it with ``keep_last=2`` (current + previous,
+    so in-flight readers of the previous snapshot finish their scan);
+    callers may vacuum harder on their own cadence.
 
     Safe alongside concurrent writers: a writer stages its snapshot dir
     BEFORE linking the claim that commits it, so an in-flight writer's
     just-written ``_snap_<n+1>_...`` is not referenced by any commit
     yet. Deleting it would let the writer's subsequent link succeed
-    with the head commit pointing at a vacuumed dir — bricking the
-    store. Like commit_log_upsert's own prune (which guards with
-    ``int(n_part) < base_n``), vacuum therefore only removes snapshot
-    dirs whose embedded commit number is <= the latest COMMITTED
-    number; dirs numbered beyond the head are in-flight claims (or
-    crash orphans that the next upsert's prune reclaims once the head
-    passes them) and survive.
+    with the head commit pointing at a vacuumed dir - bricking the
+    store. Vacuum therefore only removes snapshot dirs whose embedded
+    commit number is <= the head commit number; dirs numbered beyond
+    the head are in-flight claims (or crash orphans, reclaimed once the
+    head passes them) and survive. A dir at or below the head that no
+    retained commit names belongs to a writer that already lost its
+    claim.
     """
-    import os as _os
-    import shutil as _shutil
-
     if keep_last < 1:
         raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-    committed = read_committed(path)
-    if committed is None:
+    head = _head(path)
+    if head is None:
         return 0
-    head_n = committed[0]
-    keep_dirs = set()
-    try:
-        names = _os.listdir(_log_path(path))
-    except FileNotFoundError:
-        return 0
-    commits = sorted(n for n in names if n.endswith(".commit"))
-    for name in commits[-keep_last:]:
-        with open(_pp_join_safe(_log_path(path), name)) as f:
-            keep_dirs.add(f.read().strip())
+    # claims are always head + 1, so commit numbers are contiguous
+    keep_dirs = {
+        _read_commit(path, n)[0] for n in range(max(1, head - keep_last + 1), head + 1)
+    }
     removed = 0
-    for name in _os.listdir(path):
-        if name.startswith("_snap_") and name not in keep_dirs:
-            n_part = name.split("_")[2]
-            if not n_part.isdigit() or int(n_part) > head_n:
-                continue  # in-flight (not-yet-claimed) writer snapshot
-            _shutil.rmtree(_pp_join_safe(path, name), ignore_errors=True)
-            removed += 1
+    for name in os.listdir(path):
+        if not name.startswith("_snap_") or name in keep_dirs:
+            continue
+        n_part = name.split("_")[2]
+        if not n_part.isdigit() or int(n_part) > head:
+            continue  # in-flight (not-yet-claimed) writer snapshot
+        shutil.rmtree(posixpath.join(path, name), ignore_errors=True)
+        removed += 1
     return removed

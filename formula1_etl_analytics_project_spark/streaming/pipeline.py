@@ -8,10 +8,12 @@ shapes are first-class:
     over an event stream (late data dropped past the watermark; state
     bounded).
   * ``incremental_upsert_stream`` - ``foreachBatch`` merge of each
-    micro-batch into a parquet snapshot via the same anti-join+union
-    upsert the batch layer uses (sources.sinks.upsert_parquet, staged
-    write + swap) - at-least-once per-key on plain parquet; the
-    exactly-once form is the same plan over a transactional format.
+    micro-batch into the commit-log snapshot store via the same
+    anti-join+union upsert the batch layer uses
+    (sources.sinks.upsert_parquet_versioned). The micro-batch epoch is
+    written into the commit that publishes the snapshot, so a replayed
+    batch is skipped - exactly-once on plain parquet, and safe with
+    several writers on one store.
 
 Scale notes: watermarks bound state store size (without one, a
 groupBy-window over an unbounded stream grows state forever). The
@@ -33,11 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from formula1_etl_analytics_project_spark.schemas import TESTDATA_SCHEMAS
-from formula1_etl_analytics_project_spark.sources.sinks import (
-    upsert_parquet,
-    upsert_parquet_versioned,
-    read_current_epoch,
-)
+from formula1_etl_analytics_project_spark.sources.sinks import upsert_parquet_versioned
 
 
 def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -197,35 +195,25 @@ def incremental_upsert_stream(
     events: DataFrame,
     snapshot_path: str,
     keys: list[str] | None = None,
-    versioned: bool = True,
 ):
     """foreachBatch incremental load: merge each micro-batch into the
-    parquet snapshot (new keys insert, existing keys update). Returns
-    the StreamingQuery; caller awaits/stops it.
+    snapshot store at ``snapshot_path`` (new keys insert, existing keys
+    update). Returns the StreamingQuery; caller awaits/stops it.
 
-    Durability: with ``versioned`` (default) each merge goes through
-    ``sinks.upsert_parquet_versioned`` - write-new-then-repoint, atomic
-    pointer flip - so readers through ``sinks.read_snapshot`` NEVER see
-    a missing or partial snapshot, even if the job dies mid-batch; a
-    replayed interrupted batch is SKIPPED entirely: the micro-batch
-    epoch id commits atomically with the pointer flip, and
-    ``merge_epoch_batch`` compares the incoming epoch against the
-    committed one before touching anything - EXACTLY-once for this
-    single-writer sink, even for non-idempotent merges (tested by
-    tests/test_streaming.py::test_replayed_epoch_is_skipped).
-    ``versioned=False`` keeps the legacy in-place layout (directly
-    ``spark.read``-able at ``snapshot_path``) at the cost of the
-    delete/rename window - per-key at-least-once. Concurrent
-    multi-writer commit still needs a transactional table format
-    (Delta/Iceberg MERGE); this store is its single-writer logical
-    twin."""
+    Each micro-batch goes through :func:`merge_epoch_batch` ->
+    ``sinks.upsert_parquet_versioned``: the merged snapshot is written
+    to a fresh dir and published by an atomic commit-file claim, so
+    readers through ``sinks.read_snapshot`` NEVER see a missing or
+    partial snapshot, even if the job dies mid-batch. The micro-batch
+    epoch id is part of that commit, so a replayed interrupted batch is
+    SKIPPED entirely - exactly-once even for non-idempotent merges
+    (tests/test_streaming.py::test_replayed_epoch_is_skipped) - and a
+    second writer on the same store can neither lose this stream's
+    updates nor apply one of its epochs twice."""
     keys = keys or ["event_id"]
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        if versioned:
-            merge_epoch_batch(batch, epoch_id, snapshot_path, keys)
-        else:
-            upsert_parquet(batch.sparkSession, batch, snapshot_path, keys)
+        merge_epoch_batch(batch, epoch_id, snapshot_path, keys)
 
     return (
         events.writeStream.outputMode("update")
@@ -245,32 +233,29 @@ def merge_epoch_batch(
     committed epoch (checkpoint replay after a crash BETWEEN the
     snapshot commit and the streaming checkpoint advance - the only
     epoch Structured Streaming ever re-delivers for one checkpoint),
-    else merge and commit the epoch atomically with the snapshot
-    pointer. Returns True when the batch was applied, False skipped.
+    else merge and commit the epoch atomically with the snapshot.
+    Returns True when the batch was applied, False skipped.
 
     An epoch LOWER than the committed one is neither a replay nor
     progress - it means the query restarted against a DIFFERENT (or
     wiped) checkpoint whose epoch counter reset, and silently skipping
     would discard genuinely new data until the counter caught up.
-    That is refused loudly: pair each store with one checkpoint for
-    its lifetime, or start a fresh store for a fresh checkpoint.
+    That is refused loudly with ``ValueError``: pair each store with
+    one checkpoint for its lifetime, or start a fresh store for a
+    fresh checkpoint.
+
+    The skip-or-refuse decision is made inside each claim attempt of
+    ``upsert_parquet_versioned``, against the same head commit the
+    claim is made on; an attempt that loses the commit race re-checks
+    the epoch against the winner's commit. So with several writers
+    delivering the same epochs, each epoch is applied exactly once.
     """
-    committed = read_current_epoch(snapshot_path)
-    if committed is not None:
-        if epoch_id == committed:
-            return False
-        if epoch_id < committed:
-            raise ValueError(
-                f"epoch regression: store {snapshot_path} committed "
-                f"epoch {committed} but received epoch {epoch_id}; the "
-                "stream's checkpoint was reset or a different query is "
-                "writing - refusing to silently drop batches. Use a "
-                "fresh snapshot store for a fresh checkpoint."
-            )
-    upsert_parquet_versioned(
-        batch.sparkSession, batch, snapshot_path, keys, epoch_id=epoch_id
+    return (
+        upsert_parquet_versioned(
+            batch.sparkSession, batch, snapshot_path, keys, epoch_id=epoch_id
+        )
+        is not None
     )
-    return True
 
 
 def stream_stream_user_pairs(

@@ -1,42 +1,50 @@
 """Tests for the commit-log snapshot store (sources/sinks.py
-commit_log_upsert): optimistic concurrency on plain parquet.
+upsert_parquet_versioned / read_snapshot): optimistic concurrency on
+plain parquet.
 
-The two-writer test is GENUINELY concurrent (threads merging
-interleaved batches against the same store) and asserts no lost
-updates - the anomaly a last-write-wins pointer store cannot prevent
-and the reason transactional table formats exist.
+The writer-race tests are GENUINELY concurrent (threads merging
+batches against the same store) and assert no lost updates - the
+anomaly a last-write-wins pointer store cannot prevent and the reason
+transactional table formats exist - and, for streaming epochs, that
+every epoch is applied exactly once.
 """
 
 from __future__ import annotations
 
+import os
+import sys
 import threading
 
 from formula1_etl_analytics_project_spark.sources.sinks import (
-    commit_log_upsert,
-    read_committed,
-    read_committed_snapshot,
+    read_snapshot,
+    upsert_parquet_versioned,
 )
+
+
+def _head(path: str) -> int:
+    """Number of the latest commit (commits are numbered 1, 2, ...)."""
+    return len([n for n in os.listdir(f"{path}/_log") if n.endswith(".commit")])
 
 
 def test_commit_log_basic_merge(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("clog") / "store")
-    n1 = commit_log_upsert(
+    n1 = upsert_parquet_versioned(
         spark,
         spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"),
         path,
         ["k"],
     )
     assert n1 == 1
-    n2 = commit_log_upsert(
+    n2 = upsert_parquet_versioned(
         spark,
         spark.createDataFrame([(2, "b2"), (3, "c")], "k long, v string"),
         path,
         ["k"],
     )
     assert n2 == 2
-    snap = {r["k"]: r["v"] for r in read_committed_snapshot(spark, path).collect()}
+    snap = {r["k"]: r["v"] for r in read_snapshot(spark, path).collect()}
     assert snap == {1: "a", 2: "b2", 3: "c"}
-    assert read_committed(path)[0] == 2
+    assert _head(path) == 2
 
 
 def test_concurrent_writers_lose_no_updates(spark, tmp_path_factory):
@@ -53,7 +61,7 @@ def test_concurrent_writers_lose_no_updates(spark, tmp_path_factory):
                 batch = spark.createDataFrame(
                     [(offset + i, f"w{offset}_{i}")], "k long, v string"
                 )
-                commit_log_upsert(spark, batch, path, ["k"], max_retries=30)
+                upsert_parquet_versioned(spark, batch, path, ["k"], max_retries=30)
         except Exception as exc:  # pragma: no cover - surfaced below
             errors.append(exc)
 
@@ -62,28 +70,93 @@ def test_concurrent_writers_lose_no_updates(spark, tmp_path_factory):
     t1.start(); t2.start(); t1.join(); t2.join()
     assert not errors, errors
 
-    snap = {r["k"]: r["v"] for r in read_committed_snapshot(spark, path).collect()}
+    snap = {r["k"]: r["v"] for r in read_snapshot(spark, path).collect()}
     expected = {100 + i: f"w100_{i}" for i in range(5)}
     expected.update({200 + i: f"w200_{i}" for i in range(5)})
     assert snap == expected
     # exactly 10 commits happened - one per applied batch
-    assert read_committed(path)[0] == 10
+    assert _head(path) == 10
+
+
+def test_concurrent_epoch_writers_apply_each_epoch_once(spark, tmp_path_factory):
+    """More writer threads than cores deliver the same epoch sequence
+    0..k through merge_epoch_batch to one store. The epoch check runs
+    inside each claim attempt, so every epoch is applied by exactly one
+    thread: the others skip it (head already at that epoch) or refuse
+    it as a regression (head already past it), and a lost race
+    re-checks against the winner's commit. The store ends at epoch k
+    holding the fold of the k+1 batches."""
+    from formula1_etl_analytics_project_spark.sources.sinks import (
+        read_current_epoch,
+    )
+    from formula1_etl_analytics_project_spark.streaming.pipeline import (
+        merge_epoch_batch,
+    )
+
+    path = str(tmp_path_factory.mktemp("clog_epochs") / "store")
+    k = 4
+    n_threads = (os.cpu_count() or 1) + 2
+    # consecutive epochs overlap on one key, so the fold order matters
+    rows = [{e: f"e{e}", e + 1: f"e{e}"} for e in range(k + 1)]
+    batches = [
+        spark.createDataFrame(list(r.items()), "k long, v string") for r in rows
+    ]
+    applied: list[int] = []
+    errors: list[Exception] = []
+    lock = threading.Lock()
+    start = threading.Barrier(n_threads)
+
+    def writer() -> None:
+        try:
+            start.wait(timeout=60)
+            for e in range(k + 1):
+                try:
+                    won = merge_epoch_batch(batches[e], e, path, ["k"])
+                except ValueError as exc:
+                    if "epoch regression" not in str(exc):
+                        raise
+                    won = False  # a faster thread already committed past e
+                if won:
+                    with lock:
+                        applied.append(e)
+        except Exception as exc:  # pragma: no cover - surfaced below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=writer) for _ in range(n_threads)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # interleave the racing threads finely
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+            assert not t.is_alive(), "writer thread hung"
+    finally:
+        sys.setswitchinterval(switch)
+    assert not errors, errors
+
+    assert sorted(applied) == list(range(k + 1))
+    assert read_current_epoch(path) == k
+    assert _head(path) == k + 1
+    model: dict[int, str] = {}
+    for r in rows:
+        model.update(r)
+    snap = {r["k"]: r["v"] for r in read_snapshot(spark, path).collect()}
+    assert snap == model
 
 
 def test_loser_orphans_are_invisible_and_pruned(spark, tmp_path_factory):
     """Underscore-prefixed loser/orphan snapshot dirs must never be
     visible through the committed read path."""
-    import os
-
     path = str(tmp_path_factory.mktemp("clog_orph") / "store")
-    commit_log_upsert(
+    upsert_parquet_versioned(
         spark, spark.createDataFrame([(1, "a")], "k long, v string"), path, ["k"]
     )
     # simulate a crashed loser: stranded data dir with no commit file
     os.makedirs(f"{path}/_snap_00000099_deadbeef", exist_ok=True)
-    snap = read_committed_snapshot(spark, path)
+    snap = read_snapshot(spark, path)
     assert snap.count() == 1
-    assert read_committed(path)[0] == 1
+    assert _head(path) == 1
 
 
 def test_time_travel_reads_prior_versions(spark, tmp_path_factory):
@@ -93,17 +166,17 @@ def test_time_travel_reads_prior_versions(spark, tmp_path_factory):
     import pytest as _pytest
 
     path = str(tmp_path_factory.mktemp("clog_tt") / "store")
-    commit_log_upsert(
+    upsert_parquet_versioned(
         spark, spark.createDataFrame([(1, "a")], "k long, v string"), path, ["k"]
     )
-    commit_log_upsert(
+    upsert_parquet_versioned(
         spark, spark.createDataFrame([(1, "a2")], "k long, v string"), path, ["k"]
     )
-    v1 = {r["k"]: r["v"] for r in read_committed_snapshot(spark, path, version=1).collect()}
-    v2 = {r["k"]: r["v"] for r in read_committed_snapshot(spark, path, version=2).collect()}
+    v1 = {r["k"]: r["v"] for r in read_snapshot(spark, path, version=1).collect()}
+    v2 = {r["k"]: r["v"] for r in read_snapshot(spark, path, version=2).collect()}
     assert v1 == {1: "a"} and v2 == {1: "a2"}
     with _pytest.raises(FileNotFoundError):
-        read_committed_snapshot(spark, path, version=99)
+        read_snapshot(spark, path, version=99)
 
 
 def test_upsert_schema_evolution(spark):
@@ -139,13 +212,13 @@ def test_commit_log_equals_fold_of_upserts(spark, tmp_path_factory):
         # (8-key space) still exercise the merge path every round
         batch = {rng.randrange(8): rng.randrange(1000) for _ in range(3)}
         model.update(batch)
-        commit_log_upsert(
+        upsert_parquet_versioned(
             spark,
             spark.createDataFrame(list(batch.items()), "k long, v long"),
             path,
             ["k"],
         )
-    got = {r["k"]: r["v"] for r in read_committed_snapshot(spark, path).collect()}
+    got = {r["k"]: r["v"] for r in read_snapshot(spark, path).collect()}
     assert got == model
 
 
@@ -154,21 +227,19 @@ def test_stranded_temp_claims_are_inert(spark, tmp_path_factory):
     (or between link and unlink) strands a dot-prefixed temp file in
     _log/. It must be invisible to commit resolution and must not
     block subsequent commits."""
-    import os
-
     path = str(tmp_path_factory.mktemp("clog_tmp") / "store")
-    commit_log_upsert(
+    upsert_parquet_versioned(
         spark, spark.createDataFrame([(1, "a")], "k long, v string"), path, ["k"]
     )
     # simulate both crash windows
     with open(f"{path}/_log/.claim_tmp_deadbeef", "w") as f:
         f.write("_snap_00000099_feedface\n")
-    assert read_committed(path)[0] == 1  # temp claim not a commit
-    commit_log_upsert(
+    assert _head(path) == 1  # temp claim not a commit
+    upsert_parquet_versioned(
         spark, spark.createDataFrame([(2, "b")], "k long, v string"), path, ["k"]
     )
-    assert read_committed(path)[0] == 2
-    snap = {r["k"]: r["v"] for r in read_committed_snapshot(spark, path).collect()}
+    assert _head(path) == 2
+    snap = {r["k"]: r["v"] for r in read_snapshot(spark, path).collect()}
     assert snap == {1: "a", 2: "b"}
     assert os.path.exists(f"{path}/_log/.claim_tmp_deadbeef")  # left alone
 
@@ -181,7 +252,7 @@ def test_vacuum_keeps_recent_versions_and_fails_loud_on_old(spark, tmp_path_fact
 
     path = str(tmp_path_factory.mktemp("clog_vac") / "store")
     for i in range(4):
-        commit_log_upsert(
+        upsert_parquet_versioned(
             spark,
             spark.createDataFrame([(1, f"v{i}")], "k long, v string"),
             path,
@@ -191,17 +262,17 @@ def test_vacuum_keeps_recent_versions_and_fails_loud_on_old(spark, tmp_path_fact
     # vacuum to keep_last=1 removes exactly the previous snapshot
     removed = vacuum_commit_log(path, keep_last=1)
     assert removed == 1
-    assert read_committed_snapshot(spark, path, version=4).collect()[0]["v"] == "v3"
+    assert read_snapshot(spark, path, version=4).collect()[0]["v"] == "v3"
     # older versions: loud pruned-snapshot error, never silent wrong data
     with _pytest.raises(FileNotFoundError, match="pruned"):
-        read_committed_snapshot(spark, path, version=3)
+        read_snapshot(spark, path, version=3)
     with _pytest.raises(FileNotFoundError, match="pruned"):
-        read_committed_snapshot(spark, path, version=1)
+        read_snapshot(spark, path, version=1)
     # the store still accepts new commits after vacuum
-    commit_log_upsert(
+    upsert_parquet_versioned(
         spark, spark.createDataFrame([(2, "x")], "k long, v string"), path, ["k"]
     )
-    assert read_committed(path)[0] == 5
+    assert _head(path) == 5
 
 
 def test_vacuum_spares_inflight_writer_snapshots(spark, tmp_path_factory):
@@ -211,21 +282,19 @@ def test_vacuum_spares_inflight_writer_snapshots(spark, tmp_path_factory):
     the writer's link succeed with the head pointing at a vacuumed dir
     — every later read/upsert then fails (ADVICE r03). Only dirs at or
     below the head number are vacuum's to reclaim."""
-    import os
-
     from formula1_etl_analytics_project_spark.sources.sinks import (
         vacuum_commit_log,
     )
 
     path = str(tmp_path_factory.mktemp("clog_vac_inflight") / "store")
     for i in range(3):
-        commit_log_upsert(
+        upsert_parquet_versioned(
             spark,
             spark.createDataFrame([(1, f"v{i}")], "k long, v string"),
             path,
             ["k"],
         )
-    head = read_committed(path)[0]
+    head = _head(path)
     # a concurrent writer's staged-but-unclaimed next snapshot...
     inflight = f"_snap_{head + 1:08d}_cafebabe"
     os.makedirs(f"{path}/{inflight}")
@@ -241,8 +310,8 @@ def test_vacuum_spares_inflight_writer_snapshots(spark, tmp_path_factory):
     assert not os.path.exists(f"{path}/{orphan}")
     assert removed >= 1
     # the in-flight writer can still claim and the store stays readable
-    commit_log_upsert(
+    upsert_parquet_versioned(
         spark, spark.createDataFrame([(2, "x")], "k long, v string"), path, ["k"]
     )
-    snap = {r["k"]: r["v"] for r in read_committed_snapshot(spark, path).collect()}
+    snap = {r["k"]: r["v"] for r in read_snapshot(spark, path).collect()}
     assert snap == {1: "v2", 2: "x"}

@@ -4,7 +4,8 @@ from __future__ import annotations
 
 import pytest
 
-from formula1_etl_analytics_project_spark.etl import LOAD_ORDER, run_etl
+from formula1_etl_analytics_project_spark.etl import run_etl
+from formula1_etl_analytics_project_spark.plans.star import BUILDERS
 from tests.f1_fixture import write_csv
 
 
@@ -18,7 +19,7 @@ def etl_out(spark, tmp_path_factory):
 
 def test_all_tables_written_nonempty(spark, etl_out):
     out, counts = etl_out
-    assert set(counts) == set(LOAD_ORDER)
+    assert set(counts) == set(BUILDERS)
     assert all(n > 0 for n in counts.values()), counts
 
 

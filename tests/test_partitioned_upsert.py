@@ -100,7 +100,7 @@ def test_partitioned_upsert_keep_last_on_duplicate_incoming(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Versioned snapshot store (VERDICT r02 task 7)
+# Commit-log snapshot store: merge, retention and crash windows
 # ---------------------------------------------------------------------------
 
 
@@ -110,6 +110,10 @@ def _store_rows(spark, path):
     return {r["k"]: r["v"] for r in read_snapshot(spark, path).collect()}
 
 
+def _snap_dirs(path):
+    return sorted(n for n in os.listdir(path) if n.startswith("_snap_"))
+
+
 def test_versioned_upsert_merges_and_prunes(spark, tmp_path):
     from formula1_etl_analytics_project_spark.sources import sinks
 
@@ -117,67 +121,74 @@ def test_versioned_upsert_merges_and_prunes(spark, tmp_path):
     base = spark.createDataFrame([(1, 1.0), (2, 2.0)], ["k", "v"])
     sinks.upsert_parquet_versioned(spark, base, path, keys=["k"])
     assert _store_rows(spark, path) == {1: 1.0, 2: 2.0}
+    v1 = sinks.read_current_version(path)
 
     inc = spark.createDataFrame([(2, 9.0), (3, 3.0)], ["k", "v"])
     sinks.upsert_parquet_versioned(spark, inc, path, keys=["k"])
     assert _store_rows(spark, path) == {1: 1.0, 2: 9.0, 3: 3.0}
+    v2 = sinks.read_current_version(path)
 
     # current + previous retained (in-flight readers), older pruned
-    import os
-
-    versions = sorted(n for n in os.listdir(path) if n.startswith("_v"))
-    assert versions == ["_v00000001", "_v00000002"]
+    assert _snap_dirs(path) == [v1, v2]
+    assert v1.startswith("_snap_00000001_") and v2.startswith("_snap_00000002_")
     sinks.upsert_parquet_versioned(
         spark, spark.createDataFrame([(4, 4.0)], ["k", "v"]), path, keys=["k"]
     )
-    versions = sorted(n for n in os.listdir(path) if n.startswith("_v"))
-    assert versions == ["_v00000002", "_v00000003"]
+    v3 = sinks.read_current_version(path)
+    assert v3.startswith("_snap_00000003_")
+    assert _snap_dirs(path) == [v2, v3]
 
 
 def test_versioned_upsert_kill_windows_never_lose_the_snapshot(spark, tmp_path):
-    """Walk the swap step by step, crashing after each step, and prove
-    a reader ALWAYS gets a complete snapshot - the delete-before-write
-    window of the in-place upsert does not exist here."""
+    """Walk one commit step by step, crashing after each step, and prove
+    a reader ALWAYS gets a complete snapshot - there is no
+    delete-before-write window anywhere."""
     from formula1_etl_analytics_project_spark.sources import sinks
 
     path = str(tmp_path / "store")
     base = spark.createDataFrame([(1, 1.0), (2, 2.0)], ["k", "v"])
     sinks.upsert_parquet_versioned(spark, base, path, keys=["k"])
     old = _store_rows(spark, path)
-
-    incoming = spark.createDataFrame([(2, 9.0)], ["k", "v"])
     current = sinks.read_current_version(path)
-    existing = sinks.read_snapshot(spark, path)
-    merged = sinks.upsert(existing, incoming, ["k"])
+    merged = sinks.upsert(
+        sinks.read_snapshot(spark, path),
+        spark.createDataFrame([(2, 9.0)], ["k", "v"]),
+        ["k"],
+    )
 
-    # CRASH after step 1 (new version fully written, pointer not
-    # flipped): reader still sees the old snapshot, intact
-    v2 = sinks._write_new_version(spark, merged, path, current)
+    # CRASH after step 1 (new snapshot fully written, commit 2 not
+    # claimed): the orphan is invisible, the reader sees the old
+    # snapshot intact
+    v2 = "_snap_00000002_0000feed"
+    sinks.write_parquet(merged, os.path.join(path, v2))
+    assert sinks.read_current_version(path) == current
     assert _store_rows(spark, path) == old
 
-    # step 2 is a single atomic os.replace: afterwards the reader sees
-    # the new snapshot; the old version dir is STILL on disk for
-    # readers holding the stale pointer
-    sinks._repoint(path, v2)
+    # step 2 is a single atomic link of the full commit file: afterwards
+    # the reader sees the new snapshot; the previous dir is STILL on
+    # disk for readers that resolved the old head
+    assert sinks._claim(path, 2, v2)
+    assert sinks.read_current_version(path) == v2
     assert _store_rows(spark, path) == {1: 1.0, 2: 9.0}
-    import os
+    assert {r["k"]: r["v"] for r in sinks.read_snapshot(spark, path, version=1).collect()} == old
+    # a writer racing for the same commit number loses the claim
+    assert not sinks._claim(path, 2, "_snap_00000002_0000beef")
+    assert sinks.read_current_version(path) == v2
 
-    assert os.path.isdir(os.path.join(path, current))
-    old_df = spark.read.parquet(os.path.join(path, current))
-    assert {r["k"]: r["v"] for r in old_df.collect()} == old
-
-    # a crashed step-1 orphan is invisible (pointer never referenced
-    # it); the next successful upsert overwrites the orphan dir as its
-    # own next version - the store converges, nothing is duplicated
-    orphan = sinks._write_new_version(spark, merged, path, v2)
+    # a crashed writer's orphan for commit 3 stays invisible; the next
+    # successful upsert claims commit 3 with its own dir, its vacuum
+    # reclaims the orphan and keeps current + previous - the store
+    # converges, nothing is duplicated
+    orphan = "_snap_00000003_0000dead"
+    sinks.write_parquet(merged, os.path.join(path, orphan))
     assert _store_rows(spark, path) == {1: 1.0, 2: 9.0}
-    sinks.upsert_parquet_versioned(
+    assert sinks.upsert_parquet_versioned(
         spark, spark.createDataFrame([(5, 5.0)], ["k", "v"]), path, keys=["k"]
-    )
-    assert sinks.read_current_version(path) == orphan  # dir reused
+    ) == 3
+    v3 = sinks.read_current_version(path)
+    assert v3 != orphan and v3.startswith("_snap_00000003_")
     assert _store_rows(spark, path) == {1: 1.0, 2: 9.0, 5: 5.0}
-    versions = sorted(n for n in os.listdir(path) if n.startswith("_v"))
-    assert versions == [v2, orphan]
+    assert _snap_dirs(path) == sorted([v2, v3])
 
 
 def test_partitioned_upsert_evolve_schema_mixed_lake(spark, tmp_path):

@@ -114,9 +114,8 @@ def test_stream_dedup_within_watermark(spark, event_dir, tmp_path_factory):
 
 
 def test_incremental_upsert_stream(spark, event_dir, tmp_path_factory):
-    """Default sink is the crash-safe versioned store: every micro-batch
-    merge lands via write-new-then-repoint and is read back through
-    read_snapshot."""
+    """Every micro-batch merge is published to the snapshot store by an
+    atomic commit-file claim and read back through read_snapshot."""
     from formula1_etl_analytics_project_spark.sources.sinks import read_snapshot
 
     snap = str(tmp_path_factory.mktemp("snap") / "events_snapshot")
@@ -128,20 +127,6 @@ def test_incremental_upsert_stream(spark, event_dir, tmp_path_factory):
     source = spark.read.parquet(event_dir)
     assert merged.count() == source.count()
     assert merged.select("event_id").distinct().count() == source.count()
-
-
-def test_incremental_upsert_stream_inplace_layout(
-    spark, event_dir, tmp_path_factory
-):
-    """versioned=False keeps the legacy directly-readable layout."""
-    snap = str(tmp_path_factory.mktemp("snap") / "events_snapshot_flat")
-    stream = read_event_stream(spark, event_dir)
-    q = incremental_upsert_stream(
-        stream, snap, keys=["event_id"], versioned=False
-    )
-    q.awaitTermination()
-    merged = spark.read.parquet(snap)
-    assert merged.count() == spark.read.parquet(event_dir).count()
 
 
 def test_watermark_drops_late_rows_in_append_mode(spark, tmp_path_factory):
@@ -217,7 +202,7 @@ def test_replayed_epoch_is_skipped(spark, tmp_path_factory):
     micro-batch replayed with an already-committed epoch id (crash
     between snapshot commit and checkpoint advance) must be a no-op,
     even when its contents differ - the snapshot is the one the first
-    commit produced, and the epoch survives in the pointer."""
+    commit produced, and the epoch survives in the head commit."""
     from formula1_etl_analytics_project_spark.sources.sinks import (
         read_current_epoch,
         read_snapshot,
